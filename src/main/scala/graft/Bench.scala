@@ -101,7 +101,7 @@ object Bench {
     } catch { case _: Exception => Map.empty }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.envCpus("SPARK_GRAFT_CPUS", 32)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // The CPU count the committed reference epoch (bench_ref.json and
     // the control baselines) was measured at. Control ratios from a
@@ -109,7 +109,7 @@ object Bench {
     // r18 c8 scaling run read inflated:true purely because the
     // controls themselves got 4x fewer cores — so such runs carry no
     // box-health claim (inflated:false, controls omitted).
-    val refCpus = sys.env.getOrElse("SPARK_GRAFT_REF_CPUS", "32")
+    val refCpus = Engine.envCpus("SPARK_GRAFT_REF_CPUS", 32)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
     val noiseReps = math.max(0, sys.env.getOrElse("SPARK_GRAFT_NOISE_REPS", "2").toInt)
     // default ref: the COMMITTED min-merged per-query reference
@@ -306,10 +306,8 @@ object Bench {
     val healthJson = s""""controls":$controlsJson,""" +
       controlsMedian.map(m => s""""controls_median":${num(m)},""").getOrElse("") +
       s""""inflated":$inflated,"""
-    // cpus is an env string; emit numeric JSON only when it is one
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else jstr(cpus)
     val line = s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-      healthJson + s""""cpus":$cpusJson,""" +
+      healthJson + s""""cpus":$cpus,""" +
       s""""queries":$qs,"sf":${jstr(sfDir)},"errors":$errors,"retimed":$retimedJson}"""
     println(line)
     val absOut = java.nio.file.Paths.get(outPath).toAbsolutePath
@@ -337,7 +335,7 @@ object Bench {
     // in the file stays authoritative.
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
       s""""n_queries":${results.count(_._3)},"inflated":$inflated,""" +
-      s""""cpus":$cpusJson,"sf":${jstr(sfDir)},"errors":$errors,""" +
+      s""""cpus":$cpus,"sf":${jstr(sfDir)},"errors":$errors,""" +
       s""""queries_file":${jstr(immutableOut.toString)}}""")
     spark.stop()
   }

@@ -142,7 +142,7 @@ object ClusterCheck {
 
   // ---- sessions -------------------------------------------------------
 
-  private def localSession(cpus: String): SparkSession = {
+  private def localSession(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-cluster-check-local")
@@ -214,7 +214,7 @@ object ClusterCheck {
       (qs ++ ops).toMap
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Engine.envCpus("SPARK_GRAFT_CPUS", 8)
     val local = localSession(cpus)
     val localRes = runPhase(local, "local")
     local.stop()

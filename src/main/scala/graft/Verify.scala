@@ -9,7 +9,7 @@ object Verify {
     SparkEntry.oracleSfDir = sfDir // path-referencing oracles (q_rowid)
     // Optional 3rd arg: comma-separated query-name subset (local iteration aid).
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.envCpus("SPARK_GRAFT_CPUS", 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The engine's shared generation-store convention, as ONE mechanism
@@ -126,12 +126,21 @@ private[graft] object Stores {
   // driver FS listing, no job): any append/compaction/rebuild changes
   // the signature and misses; an unchanged store hits. Bounded
   // eviction keeps long-lived sessions (tests build many throwaway
-  // stores) from accumulating dead generations.
+  // stores) from accumulating dead generations. `read_files` keeps its
+  // resolved relations here too (listed file index + inferred schema,
+  // keyed by every leaf file the glob matches), so a warm statement
+  // skips the listing and schema-inference jobs.
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** Change signature for a store directory: (name, length, mtime)
-    * per file, one driver FS listing, no job.
+  /** Change signature for a store directory or a `read_files` glob:
+    * (name, length, mtime) per entry, driver FS listings only, no job.
+    * `path` may be a glob; each match that is a directory contributes
+    * its listing — its direct children (subdirectories by their own
+    * length and mtime), or with `recursive` every leaf file below it,
+    * the files a scan of the path would read. A path that matches
+    * nothing signs as the empty string. Entry names are relative to
+    * `path` when they lie under it, else full paths.
     *
     * Granularity assumption, stated explicitly: this catches every
     * mutation the engine's own stores can produce — writers here are
@@ -155,13 +164,23 @@ private[graft] object Stores {
     * checksum (the local FS returns null) keep the (len, mtime)
     * signature for that file — the flag never makes a signature
     * WEAKER. */
-  def dirSig(spark: SparkSession, path: String): String = {
+  def dirSig(spark: SparkSession, path: String, recursive: Boolean = false): String = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val content = spark.conf
       .get("spark.graft.stores.contentSignature", "false").toBoolean
-    fs.listStatus(p).map { s =>
-      val base = s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
+    val root = fs.makeQualified(p).toString + "/"
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+    val matches = Option(fs.globStatus(p)).fold(Seq.empty[FileStatus])(_.toSeq)
+    matches.flatMap { m =>
+      if (!m.isDirectory) Seq(m)
+      else if (recursive) leaves(m)
+      else fs.listStatus(m.getPath).toSeq
+    }.map { s =>
+      val full = fs.makeQualified(s.getPath).toString
+      val name = if (full.startsWith(root)) full.substring(root.length) else full
+      val base = s"$name:${s.getLen}:${s.getModificationTime}"
       if (!content || s.isDirectory) base
       else {
         val ck =
@@ -174,9 +193,14 @@ private[graft] object Stores {
     }.sorted.mkString("|")
   }
 
-  def cachedModel[A <: AnyRef](spark: SparkSession, kind: String,
-                               path: String)(load: => A): A = {
-    val key = s"$kind:$path@${dirSig(spark, path)}"
+  /** The value `load` produced for `kind` over `path`'s current
+    * [[dirSig]], loading on a miss. Shared by the index stores' model
+    * parameters and `read_files`' resolved relations
+    * ([[graft.sources.ReadFiles]]), which pass `recursive` so the key
+    * covers every leaf file a scan reads. */
+  def cachedModel[A <: AnyRef](spark: SparkSession, kind: String, path: String,
+                               recursive: Boolean = false)(load: => A): A = {
+    val key = s"$kind:$path@${dirSig(spark, path, recursive)}"
     val hit = modelCache.get(key)
     if (hit != null) return hit.asInstanceOf[A]
     // miss path only: bound the cache by evicting single (arbitrary)

@@ -20,7 +20,10 @@ import java.nio.charset.StandardCharsets
   * response line; connections are served by daemon threads (the
   * listener is control-plane only: page payloads are small by
   * construction, all heavy lifting stays inside Spark jobs submitted
-  * by QueryService).
+  * by QueryService). `get_query_data` launches ZERO Spark jobs: the
+  * service's per-version [[ResultReader]] serves rows and column
+  * types from the result's parquet footers, for JSON and Arrow pages
+  * alike (asserted in ServiceSpec).
   *
   * Requests:
   *   {"type":"identify","connection_id":"..."}
@@ -256,7 +259,7 @@ final class QueryServer(svc: QueryService, port: Int = 0) {
             (req \ "limit").extractOpt[Int].getOrElse(100),
             (req \ "forward").extractOpt[Boolean].getOrElse(true),
             (req \ "allow_overflow").extractOpt[Boolean].getOrElse(true))
-          val schema = r.asDataFrame.schema
+          val schema = r.schema
           val cols = schema.fieldNames
           val payload: List[JField] =
             if ((req \ "format").extractOpt[String].contains("arrow")) {

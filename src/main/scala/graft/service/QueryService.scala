@@ -595,7 +595,35 @@ final class QueryService(
     s
   }
 
-  def reader(queryId: String): ResultReader = new ResultReader(spark, resultDir(queryId))
+  // One reader per committed version dir. A committed version is
+  // immutable, so its listing and footers are read once and every
+  // later page reuses them; compaction commits a NEW dir, which the
+  // next reader(id) resolves, while readers already handed out keep
+  // their files. Bounded by arbitrary eviction: an evicted reader
+  // stays valid for its holders and is rebuilt on the next miss.
+  // The cached readers share one Hadoop conf: a conf copy is large
+  // next to the few footer counts a reader keeps.
+  private val readers = new ConcurrentHashMap[String, ResultReader]()
+  private val MaxCachedReaders = 64
+  private lazy val readerConf = spark.sessionState.newHadoopConf()
+
+  /** Paged reader over the query's live result version (an empty
+    * reader while nothing is committed). */
+  def reader(queryId: String): ResultReader =
+    committedVersions(queryId).lastOption match {
+      case None => new ResultReader(spark, versionDir(queryId, 1))
+      case Some(v) =>
+        val dir = versionDir(queryId, v)
+        val hit = readers.get(dir)
+        if (hit != null) hit
+        else {
+          while (readers.size >= MaxCachedReaders) {
+            val it = readers.keys()
+            if (it.hasMoreElements) readers.remove(it.nextElement())
+          }
+          readers.computeIfAbsent(dir, new ResultReader(spark, _, readerConf))
+        }
+    }
 
   /** Compact a completed query's result toward `targetBytes` per file
     * — the reference's declared materialization TODO
@@ -646,18 +674,26 @@ final case class ResultPage(rows: Seq[Row], next: Option[ResultCursor], prev: Op
   * `allowOverflow=false` fails a read that would cross the data
   * boundary, `true` clamps to what exists.
   *
-  * The read path launches ZERO Spark jobs (asserted in ServiceSpec):
-  * row counts come from parquet footers and pages are served by a
-  * driver-local row-group reader that skips straight to the target
-  * group — the same direct row-group addressing as the reference's
+  * The read path launches ZERO Spark jobs, in process and through
+  * `QueryServer`'s JSON and Arrow pages alike (asserted in
+  * ServiceSpec): row counts and the [[schema]] come from parquet
+  * footers and pages are served by a driver-local row-group reader
+  * that skips straight to the target group — the same direct
+  * row-group addressing as the reference's
   * `query_data_handler.rs:183-237`. A paged point-read through a
   * distributed scan would cost a full job per page; a 100-TB result
-  * set is paged by footer arithmetic exactly like a 100-row one. */
-final class ResultReader(spark: SparkSession, dir: String) {
+  * set is paged by footer arithmetic exactly like a 100-row one.
+  * [[asDataFrame]] (a Spark read) stays for nested or INT96 results,
+  * which [[ParquetRows]] does not decode. */
+final class ResultReader(spark: SparkSession, dir: String,
+                         conf: org.apache.hadoop.conf.Configuration) {
   import org.apache.parquet.hadoop.ParquetFileReader
   import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.graftbridge.SchemaBridge
+  import org.apache.spark.sql.types.StructType
 
-  private val conf = spark.sessionState.newHadoopConf()
+  def this(spark: SparkSession, dir: String) =
+    this(spark, dir, spark.sessionState.newHadoopConf())
 
   /** part-files sorted by name = write order (Spark task order).
     * A missing directory (query cancelled/failed before any commit)
@@ -671,15 +707,33 @@ final class ResultReader(spark: SparkSession, dir: String) {
       .map(_.toString).sorted
   }
 
-  /** Per-file, per-row-group row counts from footer metadata only. */
-  lazy val rowGroupRowCounts: Array[Array[Long]] = files.map { f =>
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
-    try {
-      val blocks = r.getFooter.getBlocks
-      Array.tabulate(blocks.size())(b => blocks.get(b).getRowCount)
-    } finally r.close()
+  // One pass over the footers: every file's row-group row counts, and
+  // the first file's schema (a result's files share one schema).
+  private lazy val footerMeta: (Array[Array[Long]], Option[StructType]) = {
+    var schema: Option[StructType] = None
+    val counts = files.map { f =>
+      val path = new org.apache.hadoop.fs.Path(f)
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+      try {
+        val footer = r.getFooter
+        if (schema.isEmpty)
+          schema = Some(SchemaBridge.footerSchema(spark, path, footer))
+        val blocks = footer.getBlocks
+        Array.tabulate(blocks.size())(b => blocks.get(b).getRowCount)
+      } finally r.close()
+    }
+    (counts, schema)
   }
+
+  /** Per-file, per-row-group row counts from footer metadata only. */
+  lazy val rowGroupRowCounts: Array[Array[Long]] = footerMeta._1
+
+  /** The result's schema as `asDataFrame.schema` reports it, read from
+    * a footer with no Spark job: Spark's own schema metadata
+    * (`org.apache.spark.sql.parquet.row.metadata`), else Spark's
+    * parquet-to-Catalyst conversion of the file schema. Only a result
+    * with no files falls back to [[asDataFrame]]. */
+  lazy val schema: StructType = footerMeta._2.getOrElse(asDataFrame.schema)
 
   /** Per-file row counts from footer metadata only. */
   lazy val fileRowCounts: Array[Long] = rowGroupRowCounts.map(_.sum)

@@ -1645,18 +1645,6 @@ object ReadFilesTVF {
     val spark = SparkSession.active
     connections.applyTo(spark)
     val resolved = connections.resolve(opts.get("connection"), p)
-    val fmt = opts.getOrElse("format", ReadFiles.inferFormat(resolved))
-    val df = fmt match {
-      case "csv" => spark.read
-        .option("header", opts.getOrElse("header", "true"))
-        .option("inferSchema", opts.getOrElse("inferschema", "true"))
-        .csv(resolved)
-      case "json" => spark.read.json(resolved)
-      case "orc" => spark.read.orc(resolved)
-      case _ => spark.read
-        .option("mergeSchema", opts.getOrElse("mergeschema", "false"))
-        .parquet(resolved)
-    }
-    df.queryExecution.analyzed
+    ReadFiles.base(spark, resolved, opts.toMap).queryExecution.analyzed
   }
 }

@@ -129,6 +129,73 @@ object ReadFiles {
   // (TABLE_OR_VIEW_NOT_FOUND under a concurrent QueryService).
   private val viewCounter = new java.util.concurrent.atomic.AtomicLong()
 
+  // Per-session cache-key component (weak keys: a dropped session
+  // frees its id).
+  private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
+
+  /** The base relation of `read_files(path, args...)`: Spark's reader
+    * for the format (explicit `format=>`, else [[inferFormat]]).
+    * Shared by the SQL rewrite and [[ReadFilesTVF]].
+    *
+    * Relations are reused across statements through the shared
+    * signature-keyed cache ([[graft.pipeline.Stores.cachedModel]]). The
+    * key holds the session, a digest of the session's SQL conf, the
+    * format and options, and the (path, length, mtime) signature of
+    * every leaf file the path matches. Any added, deleted or rewritten
+    * file and any `SET` therefore resolve afresh on the next statement.
+    * A hit reuses a relation whose file index is already listed and
+    * whose schema is already inferred, so the statement skips the
+    * listing and schema-inference jobs analysis would otherwise run.
+    * Sessions never share entries: a relation registers its views in
+    * its own session. */
+  private[sources] def base(spark: SparkSession, path: String,
+                            args: Map[String, String]): DataFrame = {
+    val fmt = args.getOrElse("format", inferFormat(path))
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    spark.conf.getAll.toSeq.sorted.foreach { case (k, v) =>
+      md.update(s"$k=$v\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    val conf = md.digest().map("%02x".format(_)).mkString
+    val session = sessionIds.synchronized {
+      sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString)
+    }
+    val kind = s"read_files:$session:$conf:$fmt:${args.toSeq.sorted.mkString(",")}"
+    // mode=>'permissive' (default; malformed rows → nulls) |
+    // 'dropmalformed' | 'failfast' — Spark's malformed-record
+    // policies surfaced through the TVF for text formats, where
+    // real-world files are never as clean as the schema claims.
+    val parseMode = args.getOrElse("mode", "PERMISSIVE").toUpperCase
+    graft.pipeline.Stores.cachedModel(spark, kind, path, recursive = true) {
+      fmt match {
+        case "csv" => spark.read
+          .option("header", args.getOrElse("header", "true"))
+          .option("inferSchema", args.getOrElse("inferschema", "true"))
+          .option("mode", parseMode)
+          .csv(path)
+        case "json" => spark.read.option("mode", parseMode).json(path)
+        case "orc" => spark.read.orc(path)
+        case _ =>
+          // Stock reader first (inference, mergeSchema, nested types
+          // all Spark's own); fall back to the widened ingestion
+          // path only when the footer carries a type Spark rejects
+          // (FLOAT16 — see WidenedParquet).
+          try spark.read
+            .option("mergeSchema", args.getOrElse("mergeschema", "false"))
+            .parquet(path)
+          catch {
+            case e: Throwable if {
+              var t: Throwable = e; var hit = false
+              while (t != null && !hit) {
+                hit = Option(t.getMessage).exists(_.contains("PARQUET_TYPE_ILLEGAL"))
+                t = t.getCause
+              }
+              hit
+            } => WidenedParquet.read(spark, path)
+          }
+      }
+    }
+  }
+
   /** Rewrite every read_files(...) call in `sql` to a registered temp
     * view over the resolved path(s). Calls inside single-quoted string
     * literals are left untouched (quote-parity scan). Returns the
@@ -146,38 +213,7 @@ object ReadFiles {
           .map(a => a.group(1).toLowerCase -> a.group(2)).toMap
         val path = connections.resolve(args.get("connection"), m.group(1))
         val fmt = args.getOrElse("format", inferFormat(path))
-        // mode=>'permissive' (default; malformed rows → nulls) |
-        // 'dropmalformed' | 'failfast' — Spark's malformed-record
-        // policies surfaced through the TVF for text formats, where
-        // real-world files are never as clean as the schema claims.
-        val parseMode = args.getOrElse("mode", "PERMISSIVE").toUpperCase
-        val base = fmt match {
-          case "csv" => spark.read
-            .option("header", args.getOrElse("header", "true"))
-            .option("inferSchema", args.getOrElse("inferschema", "true"))
-            .option("mode", parseMode)
-            .csv(path)
-          case "json" => spark.read.option("mode", parseMode).json(path)
-          case "orc" => spark.read.orc(path)
-          case _ =>
-            // Stock reader first (inference, mergeSchema, nested types
-            // all Spark's own); fall back to the widened ingestion
-            // path only when the footer carries a type Spark rejects
-            // (FLOAT16 — see WidenedParquet).
-            try spark.read
-              .option("mergeSchema", args.getOrElse("mergeschema", "false"))
-              .parquet(path)
-            catch {
-              case e: Throwable if {
-                var t: Throwable = e; var hit = false
-                while (t != null && !hit) {
-                  hit = Option(t.getMessage).exists(_.contains("PARQUET_TYPE_ILLEGAL"))
-                  t = t.getCause
-                }
-                hit
-              } => WidenedParquet.read(spark, path)
-            }
-        }
+        val base = ReadFiles.base(spark, path, args)
         // rowid=>'true': STABLE record identity per row — the
         // reference assigns record ids during the scan
         // (read_files_task.rs:156-289); Spark's `_metadata` struct

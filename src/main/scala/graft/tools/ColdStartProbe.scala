@@ -23,7 +23,7 @@ object ColdStartProbe {
     require(args.length == 4,
       "usage: ColdStartProbe <textIndexDir> <ivfIndexDir> <sfDir> <warm 0|1>")
     val Array(tidx, ivf, sfDir, warmFlag) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Engine.envCpus("SPARK_GRAFT_CPUS", 32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

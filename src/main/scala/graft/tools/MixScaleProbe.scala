@@ -56,7 +56,7 @@ object MixScaleProbe {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_FUZZY_OUT", "/tmp/graft_fuzzy_scale")
     val report = sys.env.getOrElse("SPARK_GRAFT_MIX_REPORT", "MIX_SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Engine.envCpus("SPARK_GRAFT_CPUS", 32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -32,7 +32,7 @@ object QueryProfile {
     require(args.nonEmpty, "usage: QueryProfile q1[,q2,...]")
     val names = args(0).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Engine.envCpus("SPARK_GRAFT_CPUS", 32)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "2").toInt)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -128,7 +128,7 @@ final class TuiApp(
     if (ids.isEmpty) return None
     if (windows(i) == null) readerFor(i).foreach { r =>
       val page = r.read(ResultCursor(0, 0), pageSize)
-      windows(i) = Window(0, page.rows, r.asDataFrame.columns.toSeq, r.totalRows)
+      windows(i) = Window(0, page.rows, r.schema.fieldNames.toSeq, r.totalRows)
     }
     Option(windows(i)).map(w => (w.start, w.rows, w.cols, w.total))
   }

@@ -40,4 +40,14 @@ class BenchRefSpec extends AnyFunSuite {
     assert(text.contains("\"sf\":\"/root/testdata/sf0.1\""),
       "bench_ref.json must carry sf /root/testdata/sf0.1")
   }
+
+  test("core counts parse as positive integers or fail loudly") {
+    def cpus(v: String) = Engine.envCpus("SPARK_GRAFT_CPUS", 32, Map("SPARK_GRAFT_CPUS" -> v))
+    assert(Engine.envCpus("SPARK_GRAFT_CPUS", 32, Map.empty) == 32)
+    assert(cpus("4") == 4 && cpus(" 8 ") == 8)
+    Seq("", "0", "-2", "four", "4.5", "4x").foreach { bad =>
+      val e = intercept[IllegalArgumentException](cpus(bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
 }

@@ -128,9 +128,100 @@ class ServiceSpec extends AnyFunSuite with SparkFixture {
         .map(x => (x.getLong(0), String.valueOf(x.get(1)), x.getString(2), x.getDouble(3)))
       assert(viaPages.size == viaSpark.size)
       assert(viaPages.toSet == viaSpark)
+      // the wire path too: QueryServer pages in JSON and Arrow, with
+      // column names and Arrow types from the footer schema
+      val server = new graft.service.QueryServer(svc)
+      try {
+        val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+        val out = new java.io.PrintWriter(sock.getOutputStream, true)
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream))
+        def call(json: String): String = { out.println(json); in.readLine() }
+        Seq(false, true).foreach { arrow =>
+          implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+          var cursor = Option((0, 0L))
+          var served = 0L
+          while (cursor.isDefined) {
+            val (f, row) = cursor.get
+            val fmt = if (arrow) ""","format":"arrow"""" else ""
+            val resp = call(s"""{"type":"get_query_data","query_id":"$id",""" +
+              s""""file_idx":$f,"row_idx":$row,"limit":13$fmt}""")
+            assert(resp.contains("get_query_data_resp"), resp)
+            assert(resp.contains(
+              "\"columns\":[\"o_orderkey\",\"o_orderdate\",\"o_orderstatus\",\"o_totalprice\"]"))
+            val json = org.json4s.jackson.JsonMethods.parse(resp)
+            served += (if (arrow) {
+              val ipc = java.util.Base64.getDecoder.decode((json \ "arrow_ipc").extract[String])
+              val alloc = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
+              val rd = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+                new java.io.ByteArrayInputStream(ipc), alloc)
+              try { assert(rd.loadNextBatch()); rd.getVectorSchemaRoot.getRowCount.toLong }
+              finally { rd.close(); alloc.close() }
+            } else (json \ "rows").extract[List[org.json4s.JValue]].size.toLong)
+            cursor = json \ "next" match {
+              case n: org.json4s.JObject =>
+                Some(((n \ "file_idx").extract[Int], (n \ "row_idx").extract[Long]))
+              case _ => None
+            }
+          }
+          assert(served == viaSpark.size, s"arrow=$arrow served $served rows")
+        }
+        sock.close()
+      } finally server.close()
       Thread.sleep(1000) // listener bus is async; let any job event land
       assert(jobs.get == 0, s"paged read path launched ${jobs.get} Spark job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("warm read_files statement over a 40-file glob launches only its result write") {
+    // 40 root paths > Spark's 32-path parallel-listing threshold: a
+    // cold statement runs a listing job and a schema-inference job
+    // before its write; a warm one reuses the resolved relation
+    val dir = java.nio.file.Files.createTempDirectory("graft_glob40").toString
+    spark.range(0, 4000, 1, 40).write.parquet(s"$dir/t")
+    val sql = s"select id from read_files('$dir/t/*.parquet') where id % 97 = 0"
+    def jobsOf(id: String): Int = {
+      assert(svc.awaitComplete(id) == QueryStatus.Complete)
+      Thread.sleep(1000) // listener bus is async
+      svc.metrics(id).get.numJobs
+    }
+    val cold = jobsOf(svc.runQuery(sql))
+    val warmId = svc.runQuery(sql)
+    val warm = jobsOf(warmId)
+    assert(warm == 1, s"warm statement launched $warm jobs (cold: $cold)")
+    assert(cold >= 3, s"cold statement launched only $cold jobs")
+    assert(svc.reader(warmId).totalRows == 42)
+  }
+
+  test("ResultReader.schema is the Spark-read schema, built from the footer") {
+    val cols =
+      "timestamp'2024-01-02 03:04:05' as ts, timestamp_ntz'2024-01-02 03:04:05' as ntz, " +
+        "date'2024-01-02' as d, cast(r_regionkey as decimal(12, 2)) as dec, " +
+        "cast(r_regionkey as decimal(30, 5)) as wide_dec, cast(r_name as binary) as bin, " +
+        "r_regionkey > 2 as flag, r_name"
+    Seq("", " where r_regionkey < 0").foreach { where =>
+      val id = svc.runQuery(s"select $cols from read_files('$sfDir/region.parquet')$where")
+      assert(svc.awaitComplete(id) == QueryStatus.Complete)
+      val r = svc.reader(id)
+      assert(r.files.nonEmpty)
+      assert(r.totalRows == (if (where.isEmpty) 5 else 0))
+      assert(r.schema == r.asDataFrame.schema, s"where='$where'")
+    }
+  }
+
+  test("service readers: one per committed version, a new one after compaction") {
+    val id = svc.runQuery(
+      s"select o_orderkey from read_files('$sfDir/orders.parquet') where o_orderkey < 300")
+    assert(svc.awaitComplete(id) == QueryStatus.Complete)
+    val v1 = svc.reader(id)
+    assert(svc.reader(id) eq v1, "a committed version's reader is reused")
+    val first = v1.read(ResultCursor(0, 0), 10).rows
+    svc.compactResult(id)
+    val v2 = svc.reader(id)
+    assert(!(v2 eq v1) && v2.files.length == 1 && v2.totalRows == v1.totalRows)
+    assert(svc.reader(id) eq v2)
+    // the open v1 reader keeps serving its own (grace) files
+    assert(v1.read(ResultCursor(0, 0), 10).rows == first)
+    assert(v1.files.forall(f => f.contains(s"/$id/v1/")))
   }
 
   test("TCP query protocol: run_query, status poll, paged data over a real socket") {
